@@ -29,6 +29,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
 
+from ..session import widen_if_narrow
 from .langid import HASH_DIM, featurize
 from .perplexity import _BOS, _V, _encode
 
@@ -91,17 +92,8 @@ def train_models_fused(
                 {"m": [], "label": [], "a": [], "b": [], "n": [], "rows": []}
             )
 
-    src = df.select(F.col(text_col), F.col(label_col))
-    # A small corpus file (or one unsplittable gzip/row-group) scans as
-    # a HANDFUL of tasks, serializing the whole Python counting pass on
-    # one core (measured: 1 task -> featurize alone 2.8 s single-thread
-    # at sf0.1). Widen to the session's parallelism BEFORE the Python
-    # boundary — a round-robin shuffle of slim (text, label) rows costs
-    # ~nothing next to the per-doc n-gram loop it parallelizes. Guarded:
-    # an already-wide corpus scan (the 100 TB case) is never reshuffled.
-    par = src.sparkSession.sparkContext.defaultParallelism
-    if src.rdd.getNumPartitions() < par:
-        src = src.repartition(par)
+    # widen before the Python boundary, where the per-doc loop runs
+    src = widen_if_narrow(df.select(F.col(text_col), F.col(label_col)))
     agg = (
         src.mapInPandas(
             _both_counts,

@@ -59,13 +59,12 @@ def run_cascade(
     perplexity_udf=None,
     neardup_kwargs: dict | None = None,
     part_buckets: int = 64,
-    use_decode: bool = True,
     overrides_broadcast: bool = True,
 ) -> DataFrame:
     """Full decision engine: pairs -> DECISIONS_SCHEMA rows.
 
-    ``use_decode``: validate the byte streams via the Arrow-batched
-    decoder (functions.image.decode_validate_inline) — catches truncated/garbage
+    The byte streams are validated by the Arrow-batched decoder
+    (functions.image.decode_validate_inline) — it catches truncated/garbage
     streams and metadata/pixel dimension mismatches that the
     metadata-only rules cannot see (the coordinate-validation analog,
     reference import_data_db.py:60-100).
@@ -85,13 +84,10 @@ def run_cascade(
     # join on the phash column the rows already carry — no image_id
     # shuffle of the wide decoded rows.
     ph_map, n_map = neardup_phash_map(pairs, **(neardup_kwargs or {}))
-    if use_decode:
-        # fused prepare: bytes read exactly once; all text signals
-        # computed in the same Arrow pass (see functions/image.py for
-        # why Python set-membership beats Catalyst here)
-        base = decode_validate_inline(pairs)
-    else:
-        base = pairs.drop("bytes").withColumn("dec_ok", F.lit(True))
+    # fused prepare: bytes read exactly once; all text signals
+    # computed in the same Arrow pass (see functions/image.py for
+    # why Python set-membership beats Catalyst here)
+    base = decode_validate_inline(pairs)
     scored = score_signals(base, langid_udf, perplexity_udf)
 
     # ---- hit bitmask, computed BEFORE the cluster join -----------------
@@ -107,10 +103,9 @@ def run_cascade(
             "caption_scrubbed_pre", SCRUB.scrubbed_caption(F.col("caption"))
         )
     pre_hits = metadata_rule_hits(scored, cfg)
-    if use_decode:
-        pre_hits["corrupt_image"] = pre_hits["corrupt_image"] | ~F.coalesce(
-            F.col("dec_ok"), F.lit(False)
-        )
+    pre_hits["corrupt_image"] = pre_hits["corrupt_image"] | ~F.coalesce(
+        F.col("dec_ok"), F.lit(False)
+    )
     pre_hits.update(signal_rule_hits(cfg))
     del pre_hits["near_duplicate"]  # post-join signal
     pre_hits["scrub"] = F.col("caption").isNotNull() & (

@@ -72,7 +72,7 @@ def shingle_rows(
     id_col: str = "doc_id",
     distinct: bool = True,
 ) -> DataFrame:
-    """Distinct (id, shingle) rows via posexplode + lead window.
+    """(id, shingle) rows via posexplode + lead window, distinct by default.
 
     ``distinct=False`` skips the per-doc dedup exchange and returns one
     row per gram OCCURRENCE — for consumers whose aggregation is
@@ -176,7 +176,8 @@ def ngram_jaccard_pairs(
     # window + distinct (+ df-cap window) chain would run once per
     # consumer. localCheckpoint(eager=False) — the repo-wide diamond
     # rule: one slim (id, shingle) RDD feeds all three, blocks freed by
-    # the ContextCleaner, laziness keeps construction job-free.
+    # the ContextCleaner. Lazy is NOT job-free under AQE: every
+    # pre-final shuffle stage of sh runs at construction.
     sh = sh.localCheckpoint(eager=False)
     sizes = sh.groupBy("id").agg(F.count("*").alias("n_sh"))
     a, b = sh.alias("a"), sh.alias("b")
@@ -297,9 +298,10 @@ def minhash_lsh_pairs(
     # subtrees instead of reusing them — each consumer would re-run the
     # shingle explode + 16-min aggregate. localCheckpoint(eager=False),
     # the repo-wide diamond pattern: one slim (id, sig[16]) RDD feeds
-    # every consumer, blocks freed by the ContextCleaner, laziness
-    # keeps construction job-free. (Measured at sf0.1: q26 2.3 -> 2.0 s
-    # even WITH the hot-key guard below added.)
+    # every consumer, blocks freed by the ContextCleaner. Lazy is NOT
+    # job-free under AQE: the shuffle stage feeding the 16-min
+    # aggregate runs at construction. (Measured at sf0.1: q26
+    # 2.3 -> 2.0 s even WITH the hot-key guard below added.)
     sigs = minhash_signatures(
         docs, n=n, text_col=text_col, id_col=id_col
     ).localCheckpoint(eager=False)

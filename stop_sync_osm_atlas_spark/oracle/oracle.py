@@ -205,7 +205,6 @@ def run_oracle(
     overrides: pd.DataFrame | None = None,
     cfg: RuleConfig | None = None,
     neardup_kwargs: dict | None = None,
-    use_decode: bool = True,
 ) -> pd.DataFrame:
     cfg = cfg or RuleConfig()
     nd = neardup_oracle(pairs, **(neardup_kwargs or {}))
@@ -243,7 +242,7 @@ def run_oracle(
                 or r.h <= 0
                 or not isinstance(r.fmt, str)
                 or r.fmt not in ("png", "jpeg")
-                or (use_decode and not _decode_ok(r))
+                or not _decode_ok(r)
             ),
             "empty_caption": cap is None or not cap.strip(_ASCII_WS),
             "caption_too_short": nw < cfg.min_words,

@@ -19,7 +19,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(
@@ -92,7 +92,18 @@ def get_spark(
     return spark
 
 
-def stop_spark() -> None:
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        active.stop()
+def widen_if_narrow(df: DataFrame) -> DataFrame:
+    """Round-robin ``df`` to the session's default parallelism when it
+    has fewer partitions; otherwise return it unchanged.
+
+    A small fixture file (one row group, one unsplittable gzip) scans
+    as ONE task, serializing every per-row Python stage behind it on a
+    single core. A wide scan (the 100 TB case) must never be
+    reshuffled, hence the guard. Caveat: under AQE ``getNumPartitions``
+    resolves the final physical plan, so any pre-final shuffle stages
+    of ``df`` run here, and the count it sees is the post-shuffle one.
+    """
+    par = df.sparkSession.sparkContext.defaultParallelism
+    if df.rdd.getNumPartitions() < par:
+        return df.repartition(par)
+    return df

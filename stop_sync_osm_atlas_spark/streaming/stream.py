@@ -22,6 +22,7 @@ from ..operators import scrub as SCRUB
 from ..operators.cascade import score_signals
 from ..operators.rules import RuleConfig, metadata_rule_hits, signal_rule_hits, with_rule_resolution
 from ..schemas import PAIRS_SCHEMA
+from ..session import widen_if_narrow
 
 
 def _resolve_stream(scored: DataFrame, cfg: RuleConfig) -> DataFrame:
@@ -175,17 +176,10 @@ def stage_and_drain_many(
         f"{hashlib.md5(tag.encode()).hexdigest()[:10]}_p{os.getpid()}"
     )
     out: dict[str, DataFrame] = {}
-    # A staged frame derived from one small file writes ONE parquet
-    # file, and the replay streams then scan it as ONE partition —
-    # serializing each arm's whole per-row work (the q53 rule ladder is
-    # ~1 ms/row) on a single core. Widen narrow frames to the session's
-    # parallelism before staging so the micro-batches fan out; an
-    # already-wide frame (the 100 TB case) is never reshuffled. Row
+    # widen before staging so the replay micro-batches fan out; row
     # placement does not affect any drain contract (per-key state,
-    # sets, watermarked counts).
-    par = spark.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < par:
-        df = df.repartition(par)
+    # sets, watermarked counts)
+    df = widen_if_narrow(df)
     # the staging write sits INSIDE the try so a mid-write failure
     # (disk full, serialization error) still hits the finally rmtree
     try:

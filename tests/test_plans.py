@@ -62,6 +62,22 @@ def test_broadcast_join_for_small_dim(spark):
     assert "BroadcastHashJoin" in plan
 
 
+def test_widen_if_narrow_widens_only_narrow_frames(spark):
+    """A 1-partition frame widens to the session's parallelism; an
+    already-wide frame comes back untouched (no reshuffle in its plan)."""
+    from stop_sync_osm_atlas_spark.session import widen_if_narrow
+
+    assert spark.sparkContext.defaultParallelism == 8
+    narrow = spark.range(0, 100, numPartitions=1)
+    assert widen_if_narrow(narrow).rdd.getNumPartitions() == 8
+
+    wide = spark.range(0, 100, numPartitions=16)
+    out = widen_if_narrow(wide)
+    assert out is wide
+    assert "Repartition" not in out._jdf.queryExecution().logical().toString()
+    assert "RoundRobinPartitioning" not in _plan(out)
+
+
 def test_cascade_rules_stay_codegen(spark, fixture_paths):
     """The metadata rule ladder must be whole-stage-codegen'd (no
     Python row UDFs in the hot path)."""
