@@ -1194,7 +1194,7 @@ def q48_model_cascade(spark, sf):
     correctly fires on ~half the rows (NB avg conf 0.94 on flags).
     Both models train in ONE fused corpus pass (one scan + one bounded
     collect — functions/training.py) instead of two sequential jobs.
-    Pipeline analog: plans/pipeline.run_pipeline(use_model_udfs=True)."""
+    Pipeline analog: cascade.run_cascade(langid_udf=..., perplexity_udf=...)."""
     from stop_sync_osm_atlas_spark.functions.langid import langid_hashed_ngram_udf
     from stop_sync_osm_atlas_spark.functions.perplexity import perplexity_udf
     from stop_sync_osm_atlas_spark.functions.training import train_models_fused

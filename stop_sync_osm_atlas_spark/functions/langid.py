@@ -174,52 +174,66 @@ def train_langid_model(texts: list[str], labels: list[str]) -> dict:
     return {"log_prob": log_prob, "log_prior": log_prior, "langs": langs}
 
 
-def train_langid_model_distributed(df, text_col: str = "text", label_col: str = "lang") -> dict:
-    """Distributed counterpart of ``train_langid_model``.
+def nb_batch_counts(
+    pdf: "pd.DataFrame", text_col: str, label_col: str
+) -> "pd.DataFrame":
+    """One Arrow batch -> long-form NB counts (label, dim, n, rows).
 
-    Per Arrow batch: featurize + per-class feature sums reduced to a
-    long-form (label, dim, n) frame; one shuffle aggregates, the driver
-    receives <= n_lang x HASH_DIM rows. Counts equal the local trainer.
+    Per class: the nonzero per-dim feature sums, plus one dim=-1 row
+    whose ``rows`` carries the class's doc count (the prior).
     """
-    import pandas as _pd
-    from pyspark.sql import functions as SF
+    X = featurize(pdf[text_col])
+    out = []
+    for lbl, idx in pdf.groupby(label_col).groups.items():
+        sums = X[pdf.index.get_indexer(idx)].sum(axis=0)
+        dims = np.nonzero(sums)[0]
+        part = pd.DataFrame(
+            {"label": str(lbl), "dim": dims, "n": sums[dims], "rows": 0}
+        )
+        part.loc[len(dims)] = [str(lbl), -1, 0.0, len(idx)]
+        out.append(part)
+    if not out:
+        return pd.DataFrame({"label": [], "dim": [], "n": [], "rows": []})
+    return pd.concat(out, ignore_index=True)
 
-    def _feat_counts(it):
-        for pdf in it:
-            X = featurize(pdf[text_col])
-            out = []
-            for lbl, idx in pdf.groupby(label_col).groups.items():
-                sums = X[pdf.index.get_indexer(idx)].sum(axis=0)
-                dims = np.nonzero(sums)[0]
-                out.append(
-                    _pd.DataFrame(
-                        {"label": str(lbl), "dim": dims, "n": sums[dims], "rows": 0}
-                    )
-                )
-                out[-1].loc[len(dims)] = [str(lbl), -1, 0.0, len(idx)]
-            yield _pd.concat(out, ignore_index=True) if out else _pd.DataFrame(
-                {"label": [], "dim": [], "n": [], "rows": []}
-            )
 
-    agg = (
-        df.select(SF.col(text_col), SF.col(label_col))
-        .mapInPandas(_feat_counts, schema="label string, dim int, n double, rows long")
-        .groupBy("label", "dim")
-        .agg(SF.sum("n").alias("n"), SF.sum("rows").alias("rows"))
-        .collect()
-    )
-    langs = sorted({r["label"] for r in agg})
+def nb_model(rows) -> dict:
+    """Aggregated ``(label, dim, n, rows)`` counts -> the model dict of
+    ``train_langid_model`` (same +1 smoothing, so equal counts give an
+    equal model)."""
+    rows = list(rows)
+    langs = sorted({label for label, _, _, _ in rows})
     counts = np.ones((HASH_DIM, len(langs)), dtype=np.float64)
     prior = np.ones(len(langs), dtype=np.float64)
-    for r in agg:
-        k = langs.index(r["label"])
-        if r["dim"] == -1:
-            prior[k] += r["rows"]
+    for label, dim, n, n_rows in rows:
+        k = langs.index(label)
+        if dim == -1:
+            prior[k] += n_rows
         else:
-            counts[r["dim"], k] += r["n"]
+            counts[dim, k] += n
     log_prob = np.log(counts / counts.sum(axis=0, keepdims=True))
     log_prior = np.log(prior / prior.sum())
     return {"log_prob": log_prob, "log_prior": log_prior, "langs": langs}
+
+
+def train_langid_model_distributed(df, text_col: str = "text", label_col: str = "lang") -> dict:
+    """Distributed counterpart of ``train_langid_model``.
+
+    Per Arrow batch: ``nb_batch_counts``; one shuffle aggregates, the
+    driver receives <= n_lang x HASH_DIM rows. Counts equal the local
+    trainer.
+    """
+    agg = (
+        df.select(F.col(text_col), F.col(label_col))
+        .mapInPandas(
+            lambda it: (nb_batch_counts(pdf, text_col, label_col) for pdf in it),
+            schema="label string, dim int, n double, rows long",
+        )
+        .groupBy("label", "dim")
+        .agg(F.sum("n").alias("n"), F.sum("rows").alias("rows"))
+        .collect()
+    )
+    return nb_model(agg)
 
 
 def langid_hashed_ngram_udf(model: dict):

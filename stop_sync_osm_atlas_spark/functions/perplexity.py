@@ -50,6 +50,30 @@ def train_char_bigram(texts: list[str]) -> np.ndarray:
     return np.log(counts / counts.sum(axis=1, keepdims=True))
 
 
+def bigram_batch_counts(texts: "pd.Series") -> "pd.DataFrame":
+    """One Arrow batch -> its nonzero (prev, cur, n) bigram counts."""
+    counts = np.zeros((_V, _V), dtype=np.int64)
+    for t in texts:
+        if not isinstance(t, str) or not t:
+            continue
+        enc = _encode(t)
+        if len(enc) == 0:
+            continue
+        prev = np.concatenate(([_BOS], enc[:-1]))
+        np.add.at(counts, (prev, enc), 1)
+    prev_i, cur_i = np.nonzero(counts)
+    return pd.DataFrame({"prev": prev_i, "cur": cur_i, "n": counts[prev_i, cur_i]})
+
+
+def bigram_model(rows) -> np.ndarray:
+    """Aggregated ``(prev, cur, n)`` counts -> the log-prob table of
+    ``train_char_bigram`` (same +1 smoothing)."""
+    counts = np.ones((_V, _V), dtype=np.float64)
+    for prev, cur, n in rows:
+        counts[prev, cur] += n
+    return np.log(counts / counts.sum(axis=1, keepdims=True))
+
+
 def train_char_bigram_distributed(df, text_col: str = "text") -> np.ndarray:
     """Distributed counterpart of ``train_char_bigram``.
 
@@ -59,35 +83,17 @@ def train_char_bigram_distributed(df, text_col: str = "text") -> np.ndarray:
     receives <= V^2 = 9409 aggregated rows. Exactly equal counts to the
     single-threaded trainer (integer adds commute).
     """
-    from pyspark.sql import functions as F
-
-    def _count_batches(it):
-        for pdf in it:
-            counts = np.zeros((_V, _V), dtype=np.int64)
-            for t in pdf[text_col]:
-                if not isinstance(t, str) or not t:
-                    continue
-                enc = _encode(t)
-                if len(enc) == 0:
-                    continue
-                prev = np.concatenate(([_BOS], enc[:-1]))
-                np.add.at(counts, (prev, enc), 1)
-            prev_i, cur_i = np.nonzero(counts)
-            yield pd.DataFrame(
-                {"prev": prev_i, "cur": cur_i, "n": counts[prev_i, cur_i]}
-            )
-
     agg = (
         df.select(text_col)
-        .mapInPandas(_count_batches, schema="prev int, cur int, n long")
+        .mapInPandas(
+            lambda it: (bigram_batch_counts(pdf[text_col]) for pdf in it),
+            schema="prev int, cur int, n long",
+        )
         .groupBy("prev", "cur")
         .agg(F.sum("n").alias("n"))
         .collect()
     )
-    counts = np.ones((_V, _V), dtype=np.float64)  # +1 smooth, as local
-    for r in agg:
-        counts[r["prev"], r["cur"]] += r["n"]
-    return np.log(counts / counts.sum(axis=1, keepdims=True))
+    return bigram_model(agg)
 
 
 def perplexity_scores(texts: pd.Series, log_prob: np.ndarray) -> np.ndarray:

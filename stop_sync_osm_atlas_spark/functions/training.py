@@ -11,11 +11,12 @@ time ~ #sequential jobs).
 
 ``train_models_fused`` computes both models in ONE mapInPandas pass over
 the corpus, one shuffle, one bounded collect (<= n_lang x HASH_DIM +
-V^2 + n_lang rows — all aggregated counts, never text). The per-model
-count reconstruction mirrors ``train_langid_model_distributed``
-(langid.py:139-157) and ``train_char_bigram_distributed``
-(perplexity.py:80-90) exactly; ``tests/test_scorers.py`` asserts the
-fused outputs are bit-identical to the individual trainers'.
+V^2 + n_lang rows — all aggregated counts, never text). Each model's
+per-batch counter and model builder are the ones its distributed
+trainer uses (``langid.nb_batch_counts``/``nb_model``,
+``perplexity.bigram_batch_counts``/``bigram_model``);
+``tests/test_model_pipeline.py`` asserts the fused outputs are
+bit-identical to the individual trainers'.
 
 Row encoding in the fused long-form frame (m, label, a, b, n, rows):
   m='lid', a=dim,  b=0   -> NB feature count (a=-1 row carries the
@@ -30,8 +31,8 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 from ..session import widen_if_narrow
-from .langid import HASH_DIM, featurize
-from .perplexity import _BOS, _V, _encode
+from .langid import nb_batch_counts, nb_model
+from .perplexity import bigram_batch_counts, bigram_model
 
 
 def train_models_fused(
@@ -47,50 +48,17 @@ def train_models_fused(
 
     def _both_counts(it):
         for pdf in it:
-            out = []
-            # --- langid NB feature counts (mirrors langid._feat_counts)
-            X = featurize(pdf[text_col])
-            for lbl, idx in pdf.groupby(label_col).groups.items():
-                sums = X[pdf.index.get_indexer(idx)].sum(axis=0)
-                dims = np.nonzero(sums)[0]
-                part = pd.DataFrame(
-                    {
-                        "m": "lid",
-                        "label": str(lbl),
-                        "a": dims,
-                        "b": 0,
-                        "n": sums[dims],
-                        "rows": 0,
-                    }
-                )
-                part.loc[len(dims)] = ["lid", str(lbl), -1, 0, 0.0, len(idx)]
-                out.append(part)
-            # --- char-bigram counts (mirrors perplexity._count_batches)
-            counts = np.zeros((_V, _V), dtype=np.int64)
-            for t in pdf[text_col]:
-                if not isinstance(t, str) or not t:
-                    continue
-                enc = _encode(t)
-                if len(enc) == 0:
-                    continue
-                prev = np.concatenate(([_BOS], enc[:-1]))
-                np.add.at(counts, (prev, enc), 1)
-            prev_i, cur_i = np.nonzero(counts)
-            out.append(
-                pd.DataFrame(
-                    {
-                        "m": "ppl",
-                        "label": "",
-                        "a": prev_i,
-                        "b": cur_i,
-                        "n": counts[prev_i, cur_i].astype(np.float64),
-                        "rows": 0,
-                    }
-                )
-            )
-            yield pd.concat(out, ignore_index=True) if out else pd.DataFrame(
-                {"m": [], "label": [], "a": [], "b": [], "n": [], "rows": []}
-            )
+            lid = nb_batch_counts(pdf, text_col, label_col)
+            ppl = bigram_batch_counts(pdf[text_col]).astype({"n": np.float64})
+            yield pd.concat(
+                [
+                    lid.rename(columns={"dim": "a"}).assign(m="lid", b=0),
+                    ppl.rename(columns={"prev": "a", "cur": "b"}).assign(
+                        m="ppl", label="", rows=0
+                    ),
+                ],
+                ignore_index=True,
+            )[["m", "label", "a", "b", "n", "rows"]]
 
     # widen before the Python boundary, where the per-doc loop runs
     src = widen_if_narrow(df.select(F.col(text_col), F.col(label_col)))
@@ -103,28 +71,8 @@ def train_models_fused(
         .agg(F.sum("n").alias("n"), F.sum("rows").alias("rows"))
         .collect()
     )
-
-    lid_rows = [r for r in agg if r["m"] == "lid"]
-    ppl_rows = [r for r in agg if r["m"] == "ppl"]
-
-    # --- reconstruct NB model (mirrors langid.py:146-157)
-    langs = sorted({r["label"] for r in lid_rows})
-    counts = np.ones((HASH_DIM, len(langs)), dtype=np.float64)
-    prior = np.ones(len(langs), dtype=np.float64)
-    for r in lid_rows:
-        k = langs.index(r["label"])
-        if r["a"] == -1:
-            prior[k] += r["rows"]
-        else:
-            counts[r["a"], k] += r["n"]
-    log_prob = np.log(counts / counts.sum(axis=0, keepdims=True))
-    log_prior = np.log(prior / prior.sum())
-    lid_model = {"log_prob": log_prob, "log_prior": log_prior, "langs": langs}
-
-    # --- reconstruct bigram log-prob table (mirrors perplexity.py:87-90)
-    bcounts = np.ones((_V, _V), dtype=np.float64)
-    for r in ppl_rows:
-        bcounts[r["a"], r["b"]] += r["n"]
-    bigram = np.log(bcounts / bcounts.sum(axis=1, keepdims=True))
-
+    lid_model = nb_model(
+        (r["label"], r["a"], r["n"], r["rows"]) for r in agg if r["m"] == "lid"
+    )
+    bigram = bigram_model((r["a"], r["b"], r["n"]) for r in agg if r["m"] == "ppl")
     return lid_model, bigram

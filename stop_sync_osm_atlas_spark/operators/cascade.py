@@ -14,9 +14,14 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.langid import langid_marker_cols
-from . import scrub as SCRUB
 from .neardup import attach_clusters, neardup_phash_map
-from .rules import RuleConfig, metadata_rule_hits, signal_rule_hits, with_rule_resolution
+from .rules import (
+    RuleConfig,
+    enabled_hits,
+    metadata_rule_hits,
+    signal_rule_hits,
+    with_rule_resolution,
+)
 
 
 def score_signals(
@@ -98,33 +103,17 @@ def run_cascade(
     # them). Packing all pre-join hits into ONE integer column that the
     # cluster-join shuffle then materializes makes every downstream
     # reference a cheap bit test.
-    if "caption_scrubbed_pre" not in scored.columns:
-        scored = scored.withColumn(
-            "caption_scrubbed_pre", SCRUB.scrubbed_caption(F.col("caption"))
-        )
     pre_hits = metadata_rule_hits(scored, cfg)
     pre_hits["corrupt_image"] = pre_hits["corrupt_image"] | ~F.coalesce(
         F.col("dec_ok"), F.lit(False)
     )
     pre_hits.update(signal_rule_hits(cfg))
-    del pre_hits["near_duplicate"]  # post-join signal
     pre_hits["scrub"] = F.col("caption").isNotNull() & (
         F.col("caption_scrubbed_pre") != F.col("caption")
     )
-    if "pii_only_py" in scored.columns:
-        pre_hits["pii_only_after_scrub"] = F.coalesce(
-            F.col("pii_only_py"), F.lit(False)
-        )
-    else:
-        pre_hits["pii_only_after_scrub"] = SCRUB.pii_only_from_scrubbed(
-            F.col("caption"), F.col("caption_scrubbed_pre")
-        )
-    # Per-rule enable switches (reference problem_detection.py:20-23
-    # ENABLE_* analog): a disabled rule's hit is constant-folded false —
-    # Catalyst then prunes its entire predicate subtree from the plan.
-    for name in list(pre_hits):
-        if not cfg.rule_enabled(name):
-            pre_hits[name] = F.lit(False)
+    pre_hits["pii_only_after_scrub"] = F.coalesce(F.col("pii_only_py"), F.lit(False))
+    pre_hits = enabled_hits(pre_hits, cfg)
+    near_dup = pre_hits.pop("near_duplicate")  # post-join signal
 
     bit_of = {name: i for i, name in enumerate(sorted(pre_hits))}
     mask = None
@@ -142,11 +131,7 @@ def run_cascade(
         for name in pre_hits
         if name not in ("scrub", "pii_only_after_scrub")
     }
-    hits["near_duplicate"] = (
-        F.coalesce(~F.col("is_cluster_rep"), F.lit(False))
-        if cfg.rule_enabled("near_duplicate")
-        else F.lit(False)
-    )
+    hits["near_duplicate"] = near_dup
     s_hit = F.col("_hits_mask").bitwiseAND(F.lit(1 << bit_of["scrub"])) != 0
     p_hit = (
         F.col("_hits_mask").bitwiseAND(F.lit(1 << bit_of["pii_only_after_scrub"])) != 0

@@ -31,8 +31,8 @@ class RuleConfig:
 
     ``disabled_rules`` is the analog of the reference's per-check
     ENABLE_* switches (reference problem_detection.py:20-23): a named
-    rule in the tuple never fires, in the engine AND the pandas oracle
-    (both consult ``rule_enabled``).
+    rule in the tuple never fires, in the batch and streaming engine
+    (both through ``enabled_hits``) AND the pandas oracle.
     """
 
     min_words: int = 5
@@ -135,6 +135,18 @@ def signal_rule_hits(cfg: RuleConfig) -> dict[str, Column]:
         "langid_undetermined": F.col("lang") == "und",
         "high_perplexity": F.col("perplexity") > cfg.max_perplexity,
         "near_duplicate": F.coalesce(~F.col("is_cluster_rep"), F.lit(False)),
+    }
+
+
+def enabled_hits(hits: dict[str, Column], cfg: RuleConfig) -> dict[str, Column]:
+    """Apply the per-rule enable switches (reference
+    problem_detection.py:20-23 ENABLE_* analog): a disabled rule's hit
+    is constant-folded false — Catalyst then prunes its entire
+    predicate subtree from the plan. Shared by the batch cascade and
+    the streaming resolution."""
+    return {
+        name: cond if cfg.rule_enabled(name) else F.lit(False)
+        for name, cond in hits.items()
     }
 
 

@@ -4,9 +4,10 @@ Semantics (mirrors Iceberg's snapshot-per-commit, and the reference's
 persistent_data replay surviving full re-imports, reference
 backend/services/import_persistence.py:4-101):
 
-- decisions are written partition-group by partition-group
-  (``part_bucket % n_groups``); each group commit is atomic
-  (parquet dir write + marker file rename);
+- every uncommitted partition group (``part_bucket % n_groups``) is
+  written by ONE partitioned Spark job whose observed metrics carry the
+  per-group row counts; each group commit is atomic (directory rename
+  + marker file rename);
 - a re-run lists committed markers, anti-joins nothing — it simply
   *skips* committed groups (cheaper than an anti-join: pruning happens
   at the partition level before any scan);
@@ -20,7 +21,7 @@ import json
 import os
 import shutil
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -66,66 +67,43 @@ class CheckpointedWriter:
                 out.add(int(f[len("group=") : -len(".json")]))
         return out
 
-    def write_group(self, decisions: DataFrame, group: int) -> int:
-        """Write one partition group atomically; returns row count.
-
-        The count comes from re-reading the written parquet (footer
-        metadata — no recompute of the decisions plan).
-        """
-        part = decisions.where(
-            F.pmod(F.col("part_bucket"), F.lit(self.n_groups)) == group
-        )
-        # tmp lives OUTSIDE root/decisions so a dir orphaned by a
-        # mid-write crash can never leak into read_all's partition
-        # discovery: the old in-place 'group=N.tmp' was discovered as
-        # partition value 'N.tmp' and duplicated the group's rows after
-        # resume. (An underscore prefix does NOT hide it — Spark keeps
-        # _-prefixed names that contain '=' precisely so partition
-        # columns may start with underscore, e.g. run()'s
-        # _commit_group=; pinned by test_resume_guards.)
-        tmp = os.path.join(self.root, f"group_tmp_{group}")
-        final = self._group_dir(group)
-        os.makedirs(os.path.join(self.root, "decisions"), exist_ok=True)
-        shutil.rmtree(tmp, ignore_errors=True)
-        part.write.mode("overwrite").parquet(tmp)
-        n = part.sparkSession.read.parquet(tmp).count()
-        shutil.rmtree(final, ignore_errors=True)
-        os.rename(tmp, final)
-        with open(self._marker(group) + ".tmp", "w") as fh:
-            json.dump({"group": group, "rows": n}, fh)
-        os.rename(self._marker(group) + ".tmp", self._marker(group))
-        return n
-
     def run(self, decisions: DataFrame) -> dict[int, int]:
         """Write all uncommitted groups in ONE Spark job. Returns counts.
 
         The decisions plan runs exactly once: a single
         ``partitionBy(_commit_group)`` write fans every uncommitted
-        group into its own directory, then the driver promotes each
-        directory with the same atomic rename + marker protocol as
-        ``write_group``. Group-level atomicity is preserved (a crash
+        group into its own directory, and an ``Observation`` on that
+        same write counts each group's rows — no re-read per group.
+        The driver then promotes each directory by atomic rename and
+        writes its marker. Group-level atomicity is preserved: a crash
         mid-promotion leaves promoted groups committed and the rest
-        recomputed on resume); the n-actions-over-a-persisted-frame
-        pattern this replaces cost one full pass per group.
+        recomputed on resume.
         """
         done = self.committed_groups()
         todo = [g for g in range(self.n_groups) if g not in done]
         counts: dict[int, int] = {}
         if not todo:
             return counts
-        spark = decisions.sparkSession
+        # tmp lives OUTSIDE root/decisions: read_all's partition
+        # discovery keeps even _-prefixed dirs whose name holds '=', so
+        # a crash-orphaned tmp inside would duplicate rows
+        # (test_resume_guards)
         tmp_root = os.path.join(self.root, "decisions.tmp")
         shutil.rmtree(tmp_root, ignore_errors=True)
+        grp = F.col("_commit_group")
+        obs = Observation()
         (
             decisions.withColumn(
                 "_commit_group",
                 F.pmod(F.col("part_bucket"), F.lit(self.n_groups)),
             )
-            .where(F.col("_commit_group").isin(todo))
+            .where(grp.isin(todo))
+            .observe(obs, *[F.count_if(grp == g).alias(f"g{g}") for g in todo])
             .write.mode("overwrite")
             .partitionBy("_commit_group")
             .parquet(tmp_root)
         )
+        observed = obs.get
         os.makedirs(os.path.join(self.root, "decisions"), exist_ok=True)
         for g in todo:
             src = os.path.join(tmp_root, f"_commit_group={g}")
@@ -133,12 +111,11 @@ class CheckpointedWriter:
             shutil.rmtree(final, ignore_errors=True)
             if os.path.isdir(src):
                 os.rename(src, final)
-                n = spark.read.parquet(final).count()
             else:
                 # the group matched no rows: commit it empty so a
                 # resume does not recompute the plan for nothing
                 os.makedirs(final, exist_ok=True)
-                n = 0
+            n = int(observed[f"g{g}"])
             with open(self._marker(g) + ".tmp", "w") as fh:
                 json.dump({"group": g, "rows": n}, fh)
             os.rename(self._marker(g) + ".tmp", self._marker(g))

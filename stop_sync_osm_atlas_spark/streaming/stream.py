@@ -20,7 +20,13 @@ from pyspark.sql import functions as F
 
 from ..operators import scrub as SCRUB
 from ..operators.cascade import score_signals
-from ..operators.rules import RuleConfig, metadata_rule_hits, signal_rule_hits, with_rule_resolution
+from ..operators.rules import (
+    RuleConfig,
+    enabled_hits,
+    metadata_rule_hits,
+    signal_rule_hits,
+    with_rule_resolution,
+)
 from ..schemas import PAIRS_SCHEMA
 from ..session import widen_if_narrow
 
@@ -39,12 +45,15 @@ def _resolve_stream(scored: DataFrame, cfg: RuleConfig) -> DataFrame:
     )
     hits = metadata_rule_hits(scored, cfg)
     hits.update(signal_rule_hits(cfg))
-    s_hit = F.col("caption").isNotNull() & (
+    hits["scrub"] = F.col("caption").isNotNull() & (
         F.col("caption_scrubbed_pre") != F.col("caption")
     )
-    p_hit = SCRUB.pii_only_from_scrubbed(
+    hits["pii_only_after_scrub"] = SCRUB.pii_only_from_scrubbed(
         F.col("caption"), F.col("caption_scrubbed_pre")
     )
+    hits = enabled_hits(hits, cfg)
+    s_hit = hits.pop("scrub")
+    p_hit = hits.pop("pii_only_after_scrub")
     resolved = with_rule_resolution(scored, hits, s_hit, p_hit)
     return resolved.withColumn(
         "caption_scrubbed",
@@ -93,26 +102,6 @@ def stream_metrics(
         .agg(F.count("*").alias("n"))
         .select(F.col("window.start").alias("window_start"), "decision", "n")
     )
-
-
-def run_stream_to_memory(
-    spark: SparkSession, input_dir: str, query_name: str = "stream_decisions"
-) -> DataFrame:
-    """Drive the stream synchronously to completion (local smoke path)."""
-    q = (
-        stream_decisions(spark, input_dir)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    # same exception-safe shape as stage_and_drain_many: an interrupted
-    # drain must not leave the query running against input_dir
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.sql(f"SELECT * FROM {query_name}")
 
 
 def stage_and_drain(

@@ -24,6 +24,22 @@ def _canon(pdf: pd.DataFrame) -> pd.DataFrame:
     )
 
 
+def _crash_after(writer, dec, committed):
+    """Rebuild the state a crash during promotion leaves: ``committed``
+    groups promoted and marked, the others neither — and one of them
+    still sitting in the write's tmp dir."""
+    import os
+    import shutil
+
+    writer.run(dec)
+    lost = [g for g in range(writer.n_groups) if g not in committed]
+    for g in lost:
+        os.remove(writer._marker(g))
+        shutil.rmtree(writer._group_dir(g))
+    tmp = os.path.join(writer.root, "decisions.tmp", f"_commit_group={lost[0]}")
+    dec.limit(5).write.parquet(tmp)
+
+
 def test_resume_identical_to_clean_run(spark, fixture_paths, nd_kwargs, tmp_path):
     dec = _decisions(spark, fixture_paths, nd_kwargs)
 
@@ -32,20 +48,18 @@ def test_resume_identical_to_clean_run(spark, fixture_paths, nd_kwargs, tmp_path
     counts1 = w1.run(dec)
     assert set(counts1) == {0, 1, 2, 3}
 
-    # interrupted run: commit only groups 0 and 1, then "crash"
+    # interrupted run: groups 0 and 1 committed, then a crash mid-promotion
     resume_root = str(tmp_path / "resumed")
+    _crash_after(CheckpointedWriter(resume_root, n_groups=4), dec, {0, 1})
     w2 = CheckpointedWriter(resume_root, n_groups=4)
-    w2.write_group(dec, 0)
-    w2.write_group(dec, 1)
     assert w2.committed_groups() == {0, 1}
 
     # resume: only remaining groups are written
-    w3 = CheckpointedWriter(resume_root, n_groups=4)
-    counts3 = w3.run(dec)
-    assert set(counts3) == {2, 3}
+    counts2 = w2.run(dec)
+    assert counts2 == {g: counts1[g] for g in (2, 3)}
 
     a = _canon(w1.read_all(spark).toPandas())
-    b = _canon(w3.read_all(spark).toPandas())
+    b = _canon(w2.read_all(spark).toPandas())
     pd.testing.assert_frame_equal(a, b)
 
 
@@ -72,7 +86,7 @@ def test_resume_guards(spark, fixture_paths, nd_kwargs, tmp_path):
 
     # plant an orphaned tmp dir (the writer's actual tmp path) with
     # REAL parquet rows in it
-    orphan = os.path.join(root, "group_tmp_0")
+    orphan = os.path.join(root, "decisions.tmp", "_commit_group=0")
     w.read_all(spark).limit(5).write.parquet(orphan)
     n_before = w.read_all(spark).count()
     clean = CheckpointedWriter(str(tmp_path / "guards_ref"), n_groups=2)
@@ -121,3 +135,36 @@ def test_run_executes_plan_once(spark, tmp_path):
     counts = w.run(dec)
     assert set(counts) == {0, 1, 2, 3} and sum(counts.values()) == 400
     assert acc.value == 400, f"plan executed {acc.value / 400:.1f}x, expected 1x"
+
+
+def test_run_is_one_job(spark, tmp_path):
+    """The commit is ONE Spark job on a shuffle-free frame: the
+    per-group row counts come from an Observation on the write itself
+    (the old per-group re-read cost ~3 more jobs per group), and every
+    marker's count matches the rows read back for its group."""
+    import json
+
+    from pyspark.sql import functions as F
+
+    dec = spark.range(0, 1000).select(
+        F.concat(F.lit("img:"), F.col("id").cast("string")).alias("image_id"),
+        F.lit("keep").alias("decision"),
+        F.pmod(F.col("id"), F.lit(64)).cast("int").alias("part_bucket"),
+    )
+    w = CheckpointedWriter(str(tmp_path / "jobs"), n_groups=4)
+    sc = spark.sparkContext
+    sc.setJobGroup("ckpt_one_job", "CheckpointedWriter.run")
+    try:
+        counts = w.run(dec)
+        jobs = sc.statusTracker().getJobIdsForGroup("ckpt_one_job")
+    finally:
+        sc.setJobGroup(None, None)
+    assert len(jobs) == 1, jobs
+    read = {
+        r["group"]: r["count"]
+        for r in w.read_all(spark).groupBy("group").count().collect()
+    }
+    for g in range(4):
+        with open(w._marker(g)) as fh:
+            marker = json.load(fh)
+        assert marker["rows"] == counts[g] == read[g]

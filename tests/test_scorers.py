@@ -157,17 +157,49 @@ def test_decode_stats_operator(spark, fixture_paths):
     assert (good["psnr"] >= 40).all()
 
 
-def test_streaming_rule_cascade(spark, fixture_paths, fixture_1k, tmp_path):
-    from stop_sync_osm_atlas_spark.streaming.stream import run_stream_to_memory
-    import shutil
+def test_streaming_rule_cascade(spark, fixture_paths, fixture_1k):
+    from stop_sync_osm_atlas_spark.streaming.stream import stage_and_drain, stream_decisions
 
-    # readStream needs a directory of files
-    d = tmp_path / "stream_in"
-    d.mkdir()
-    shutil.copy(fixture_paths["pairs"], d / "part-000.parquet")
-    out = run_stream_to_memory(spark, str(d)).toPandas()
+    pairs = spark.read.schema(PAIRS_SCHEMA).parquet(fixture_paths["pairs"])
+    out = stage_and_drain(
+        spark, pairs, stream_decisions, "stream_decisions_t", "rule_cascade"
+    ).toPandas()
     assert len(out) == len(fixture_1k.pairs)
     assert set(out["decision"].unique()) <= {"keep", "drop", "scrub"}
+
+
+def test_streaming_honors_disabled_rules(spark, fixture_paths, fixture_1k):
+    """RuleConfig.disabled_rules holds on the streaming path too: no
+    streamed row resolves to a disabled rule, and a row whose only hits
+    (per the pandas oracle's reasons) are the disabled rules streams
+    out as keep."""
+    from stop_sync_osm_atlas_spark.operators.rules import RuleConfig
+    from stop_sync_osm_atlas_spark.oracle.oracle import run_oracle
+    from stop_sync_osm_atlas_spark.streaming.stream import stage_and_drain, stream_decisions
+
+    off = ("caption_too_short", "scrub")
+    cfg = RuleConfig(disabled_rules=off)
+    pairs = spark.read.schema(PAIRS_SCHEMA).parquet(fixture_paths["pairs"])
+    out = (
+        stage_and_drain(
+            spark,
+            pairs,
+            lambda s, d: stream_decisions(s, d, cfg),
+            "stream_disabled_t",
+            "disabled_rules",
+        )
+        .toPandas()
+        .set_index("image_id")
+    )
+    assert len(out) == len(fixture_1k.pairs)
+    assert not out["rule"].isin(off).any()
+    orc = run_oracle(fixture_1k.pairs)
+    only_off = orc.loc[
+        orc["reasons"].map(lambda r: bool(r) and set(r) <= set(off)), "image_id"
+    ]
+    assert len(only_off) > 0
+    assert (out.loc[only_off, "decision"] == "keep").all()
+    assert (out.loc[only_off, "rule"] == "keep").all()
 
 
 def test_streaming_windowed_metrics(spark, fixture_paths, fixture_1k, tmp_path):

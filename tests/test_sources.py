@@ -109,6 +109,9 @@ def test_sloid_split_extraction(spark):
 def test_checkpoint_group_pruning(spark, fixture_paths, tmp_path):
     """The resume path must not rewrite committed groups (partition-level
     pruning, not row-level anti-join)."""
+    import os
+    import shutil
+
     from stop_sync_osm_atlas_spark.schemas import PAIRS_SCHEMA
     from stop_sync_osm_atlas_spark.sources.checkpoint import CheckpointedWriter
 
@@ -119,10 +122,16 @@ def test_checkpoint_group_pruning(spark, fixture_paths, tmp_path):
         F.pmod(F.xxhash64("image_id"), F.lit(64)).cast("int").alias("part_bucket"),
     )
     w = CheckpointedWriter(str(tmp_path / "ckpt"), n_groups=4)
-    w.write_group(dec, 2)
+    w.run(dec)
+    # leave only group 2 committed
+    for g in (0, 1, 3):
+        os.remove(w._marker(g))
+        shutil.rmtree(w._group_dir(g))
     assert w.committed_groups() == {2}
+    kept = sorted(os.listdir(w._group_dir(2)))
     counts = w.run(dec)
     assert set(counts) == {0, 1, 3}
+    assert sorted(os.listdir(w._group_dir(2))) == kept  # not rewritten
     total = w.read_all(spark).count()
     assert total == pairs.count()
 
