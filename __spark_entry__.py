@@ -33,12 +33,11 @@ from stop_sync_osm_atlas_spark.operators import dedup as DD
 from stop_sync_osm_atlas_spark.operators.lines import BULLET_CHARS, ELLIPSES
 from stop_sync_osm_atlas_spark.operators import scrub as SC
 from stop_sync_osm_atlas_spark.operators import similarity as SIM
+from stop_sync_osm_atlas_spark.operators.cascade import rule_decisions
 from stop_sync_osm_atlas_spark.operators.rules import (
     RULE_DECISION,
     RULE_PRIORITY,
     RuleConfig,
-    metadata_rule_hits,
-    with_rule_resolution,
 )
 
 
@@ -838,31 +837,14 @@ def q23_quality_cascade(spark, sf):
     the derived pairs table — the engine's keep/drop/scrub semantics
     with first-hit-wins priority resolution (SURVEY §7.1 contract),
     fully SQL-checkable (near-dup and perplexity join the non-SQL path
-    in the pipeline tests)."""
-    pairs = _derived_pairs(spark, sf)
-    cfg = RuleConfig()
-    lang, conf = langid_marker_cols(F.col("caption"))
-    scored = (
-        pairs.withColumn("lang", lang)
-        .withColumn("perplexity", F.lit(None).cast("double"))
-        .withColumn("is_cluster_rep", F.lit(True))
-    )
-    hits = metadata_rule_hits(scored, cfg)
-    hits["langid_undetermined"] = F.col("lang") == "und"
-    hits["high_perplexity"] = F.lit(False)
-    hits["near_duplicate"] = F.lit(False)
-    resolved = with_rule_resolution(
-        scored, hits, SC.scrub_hit(F.col("caption")), SC.pii_only_hit(F.col("caption"))
-    )
-    resolved = SC.with_scrub(resolved)
-    return resolved.select(
+    in the pipeline tests). Runs the one unclustered rule core,
+    operators/cascade.rule_decisions, that the streaming cascade runs."""
+    return rule_decisions(_derived_pairs(spark, sf)).select(
         "doc_id",
         "decision",
         "rule",
         "lang",
-        F.when(F.col("decision") == "scrub", F.col("caption_scrubbed"))
-        .otherwise(F.col("caption"))
-        .alias("caption_out"),
+        F.col("caption_scrubbed").alias("caption_out"),
     )
 
 
@@ -1086,6 +1068,7 @@ def q53_stream_dedup(spark, sf):
                       time, so the deterministic contract is the
                       cross-window SUM per decision == the batch
                       ladder's decision counts."""
+    from stop_sync_osm_atlas_spark.session import widen_if_narrow
     from stop_sync_osm_atlas_spark.streaming.stream import (
         stage_and_drain_many,
         stream_decisions,
@@ -1098,10 +1081,13 @@ def q53_stream_dedup(spark, sf):
     )
     # staging path / cleanup contract (per-process determinism,
     # concurrent-driver isolation, exception safety): stage_and_drain_many;
-    # the parquet staging write runs ONCE for the three streams
+    # the parquet staging write runs ONCE for the three streams. Widened
+    # first so the three replays fan out over the cores; row placement
+    # does not affect any drain contract (per-key state, sets,
+    # watermarked counts)
     sinks = stage_and_drain_many(
         spark,
-        pairs,
+        widen_if_narrow(pairs),
         [
             (stream_exact_dedup, "q53_dedup_sink", "append"),
             (stream_decisions, "q53_decision_sink", "append"),

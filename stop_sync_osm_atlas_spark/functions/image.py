@@ -532,7 +532,7 @@ PREPARED_SCHEMA = (
     "image_id string, w int, h int, fmt string, caption string, phash long, "
     "dec_ok boolean, n_words_py int, rep_ratio double, symbol_ratio_py double, "
     "stop_density_py double, lang_py string, lang_conf_py double, "
-    "caption_scrubbed_pre string, pii_only_py boolean"
+    "caption_scrubbed_pre string, pii_only_pre boolean"
 )
 
 
@@ -575,7 +575,7 @@ def decode_validate_inline(pairs: DataFrame) -> DataFrame:
                 out["lang_py"],
                 out["lang_conf_py"],
                 out["caption_scrubbed_pre"],
-                out["pii_only_py"],
+                out["pii_only_pre"],
             ) = map(list, zip(*sig)) if sig else ([],) * 8
             yield out
 

@@ -50,7 +50,5 @@ def phash_bucket_probes(phash: Column, bits: int = DEFAULT_BUCKET_BITS) -> Colum
     inside the bucket window collide in at least one probe. Explode on
     the build side only (r× row amplification on one side, not both).
     """
-    mask = (1 << bits) - 1
-    base = phash.bitwiseAND(F.lit(mask))
-    probes = [base] + [base.bitwiseXOR(F.lit(1 << i)) for i in range(bits)]
-    return F.array(*[p.cast("int") for p in probes])
+    base = phash_bucket(phash, bits)
+    return F.array(base, *[base.bitwiseXOR(F.lit(1 << i)) for i in range(bits)])

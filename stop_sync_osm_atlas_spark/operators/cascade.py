@@ -14,14 +14,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.langid import langid_marker_cols
+from . import scrub as SCRUB
 from .neardup import attach_clusters, neardup_phash_map
-from .rules import (
-    RuleConfig,
-    enabled_hits,
-    metadata_rule_hits,
-    signal_rule_hits,
-    with_rule_resolution,
-)
+from .rules import RuleConfig, rule_hits, with_rule_resolution
 
 
 def score_signals(
@@ -54,6 +49,29 @@ def score_signals(
     else:
         out = out.withColumn("perplexity", F.lit(None).cast("double"))
     return out
+
+
+def rule_decisions(pairs: DataFrame, cfg: RuleConfig | None = None) -> DataFrame:
+    """The unclustered cascade: ``pairs`` -> rule, severity, decision,
+    reasons and caption_scrubbed, all Catalyst.
+
+    Marker langid, no perplexity model, every row its own cluster
+    representative (near-dup clustering is a global self-join that
+    belongs to the batch ``run_cascade``). ONE ``caption_scrubbed_pre``
+    column feeds the scrub hit, the pii-residue hit and the scrubbed
+    caption. Shared by the streaming cascade (streaming/stream.py) and
+    the graded q23.
+    """
+    scored = (
+        score_signals(pairs)
+        .withColumn("is_cluster_rep", F.lit(True))
+        .withColumn("caption_scrubbed_pre", SCRUB.scrubbed_caption(F.col("caption")))
+    )
+    scored = scored.withColumn(
+        "pii_only_pre",
+        SCRUB.pii_only_from_scrubbed(F.col("caption"), F.col("caption_scrubbed_pre")),
+    )
+    return with_rule_resolution(scored, rule_hits(scored, cfg or RuleConfig()))
 
 
 def run_cascade(
@@ -103,16 +121,7 @@ def run_cascade(
     # them). Packing all pre-join hits into ONE integer column that the
     # cluster-join shuffle then materializes makes every downstream
     # reference a cheap bit test.
-    pre_hits = metadata_rule_hits(scored, cfg)
-    pre_hits["corrupt_image"] = pre_hits["corrupt_image"] | ~F.coalesce(
-        F.col("dec_ok"), F.lit(False)
-    )
-    pre_hits.update(signal_rule_hits(cfg))
-    pre_hits["scrub"] = F.col("caption").isNotNull() & (
-        F.col("caption_scrubbed_pre") != F.col("caption")
-    )
-    pre_hits["pii_only_after_scrub"] = F.coalesce(F.col("pii_only_py"), F.lit(False))
-    pre_hits = enabled_hits(pre_hits, cfg)
+    pre_hits = rule_hits(scored, cfg)
     near_dup = pre_hits.pop("near_duplicate")  # post-join signal
 
     bit_of = {name: i for i, name in enumerate(sorted(pre_hits))}
@@ -129,20 +138,9 @@ def run_cascade(
     hits = {
         name: F.col("_hits_mask").bitwiseAND(F.lit(1 << bit_of[name])) != 0
         for name in pre_hits
-        if name not in ("scrub", "pii_only_after_scrub")
     }
     hits["near_duplicate"] = near_dup
-    s_hit = F.col("_hits_mask").bitwiseAND(F.lit(1 << bit_of["scrub"])) != 0
-    p_hit = (
-        F.col("_hits_mask").bitwiseAND(F.lit(1 << bit_of["pii_only_after_scrub"])) != 0
-    )
-    resolved = with_rule_resolution(scored, hits, s_hit, p_hit)
-    resolved = resolved.withColumn(
-        "caption_scrubbed",
-        F.when(F.col("decision") == "scrub", F.col("caption_scrubbed_pre")).otherwise(
-            F.col("caption")
-        ),
-    )
+    resolved = with_rule_resolution(scored, hits)
     resolved = apply_overrides(resolved, overrides, broadcast=overrides_broadcast)
     # lineage partition: stable hash bucket of image_id (cross-run stable,
     # NOT Spark's task partition — survives repartitioning)

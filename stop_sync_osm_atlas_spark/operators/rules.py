@@ -16,7 +16,7 @@ columns so this module stays JVM-side.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -32,7 +32,7 @@ class RuleConfig:
     ``disabled_rules`` is the analog of the reference's per-check
     ENABLE_* switches (reference problem_detection.py:20-23): a named
     rule in the tuple never fires, in the batch and streaming engine
-    (both through ``enabled_hits``) AND the pandas oracle.
+    and q23 (all through ``rule_hits``) AND the pandas oracle.
     """
 
     min_words: int = 5
@@ -42,7 +42,6 @@ class RuleConfig:
     min_stopword_density: float = 0.05
     stopword_rule_min_words: int = 20
     max_perplexity: float = 97.0  # ~uniform-over-alphabet ppl for gibberish
-    stopwords: tuple[str, ...] = field(default_factory=lambda: tuple(ALL_STOPWORDS))
     # ENABLE_* analog (reference problem_detection.py:20-23). Honored by
     # the Spark cascade (disabled hits constant-fold to FALSE, pruning
     # the predicate subtree) AND the pandas oracle. NOTE on the 3-way
@@ -108,7 +107,7 @@ def metadata_rule_hits(df: DataFrame, cfg: RuleConfig) -> dict[str, Column]:
     swd = (
         F.col("stop_density_py")
         if "stop_density_py" in has
-        else TX.stopword_density(cap, list(cfg.stopwords))
+        else TX.stopword_density(cap, list(ALL_STOPWORDS))
     )
     return {
         "corrupt_image": (
@@ -138,33 +137,46 @@ def signal_rule_hits(cfg: RuleConfig) -> dict[str, Column]:
     }
 
 
-def enabled_hits(hits: dict[str, Column], cfg: RuleConfig) -> dict[str, Column]:
-    """Apply the per-rule enable switches (reference
-    problem_detection.py:20-23 ENABLE_* analog): a disabled rule's hit
-    is constant-folded false — Catalyst then prunes its entire
-    predicate subtree from the plan. Shared by the batch cascade and
-    the streaming resolution."""
+def rule_hits(df: DataFrame, cfg: RuleConfig) -> dict[str, Column]:
+    """Every rule's hit column, with the per-rule enable switches applied.
+
+    The one place the ladder's inputs are assembled, for the batch
+    cascade, the streaming cascade and q23 alike. Beyond the metadata
+    and signal hits it reads three prepared columns:
+    ``caption_scrubbed_pre`` (scrub fires when scrubbing changes the
+    caption), ``pii_only_pre`` (nothing but placeholders is left) and,
+    when the frame was decoded, ``dec_ok`` (a failed decode is a
+    corrupt image). A disabled rule's hit is constant-folded false
+    (reference problem_detection.py:20-23 ENABLE_* analog) — Catalyst
+    then prunes its entire predicate subtree from the plan.
+    """
+    hits = metadata_rule_hits(df, cfg)
+    if "dec_ok" in df.columns:
+        hits["corrupt_image"] = hits["corrupt_image"] | ~F.coalesce(
+            F.col("dec_ok"), F.lit(False)
+        )
+    hits.update(signal_rule_hits(cfg))
+    hits["scrub"] = F.col("caption").isNotNull() & (
+        F.col("caption_scrubbed_pre") != F.col("caption")
+    )
+    hits["pii_only_after_scrub"] = F.coalesce(F.col("pii_only_pre"), F.lit(False))
     return {
         name: cond if cfg.rule_enabled(name) else F.lit(False)
         for name, cond in hits.items()
     }
 
 
-def with_rule_resolution(
-    df: DataFrame, hits: dict[str, Column], scrub_hit: Column, pii_only_hit: Column
-) -> DataFrame:
-    """Resolve the cascade declaratively.
+def with_rule_resolution(df: DataFrame, hits: dict[str, Column]) -> DataFrame:
+    """Resolve the cascade declaratively over one hit per rule.
 
     Adds: rule, severity, decision, reasons (every rule that fired, in
     priority order — the lineage analog of the reference's
     ``matching_notes`` + problems list,
-    reference matching_process/problem_detection.py:417-472).
+    reference matching_process/problem_detection.py:417-472) and
+    caption_scrubbed (``caption_scrubbed_pre`` on scrub, else the
+    caption).
     """
-    ordered: list[tuple[str, Column]] = sorted(
-        [(name, c) for name, c in hits.items()]
-        + [("pii_only_after_scrub", pii_only_hit), ("scrub", scrub_hit)],
-        key=lambda kv: RULE_PRIORITY[kv[0]],
-    )
+    ordered = sorted(hits.items(), key=lambda kv: RULE_PRIORITY[kv[0]])
     rule_col = F.lit("keep")
     for name, cond in reversed(ordered):
         rule_col = F.when(cond, F.lit(name)).otherwise(rule_col)
@@ -193,4 +205,10 @@ def with_rule_resolution(
         .withColumn("severity", sev_map[F.col("rule")].cast("int"))
         .withColumn("decision", dec_map[F.col("rule")])
         .withColumn("reasons", reasons)
+        .withColumn(
+            "caption_scrubbed",
+            F.when(
+                F.col("decision") == "scrub", F.col("caption_scrubbed_pre")
+            ).otherwise(F.col("caption")),
+        )
     )

@@ -11,7 +11,7 @@ from __future__ import annotations
 
 import re
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from ..fixtures.norm_tables import PII_PATTERNS, TOXICITY_TERMS
@@ -44,24 +44,16 @@ def pii_only_hit(cap: Column) -> Column:
     (The scrub->drop escalation case from FIXTURES.md §5; analog of the
     reference's empty-designation skip, name_matching.py:34-37.)
     """
-    residue = F.regexp_replace(
-        scrubbed_caption(cap), r"<EMAIL>|<URL>|<PHONE>|<ID>|<TOX>", ""
-    )
-    # trim_ws on both gates: ASCII-whitespace semantics, aligned with
-    # words()/is_blank (a CRLF-padded caption must behave like its
-    # space-padded twin in every mirror)
-    return cap.isNotNull() & (trim_ws(cap) != "") & (trim_ws(residue) == "")
+    return pii_only_from_scrubbed(cap, scrubbed_caption(cap))
 
 
 def pii_only_from_scrubbed(cap: Column, scrubbed: Column) -> Column:
     """pii_only_hit over a pre-computed scrubbed column (no re-scrub)."""
     residue = F.regexp_replace(scrubbed, r"<EMAIL>|<URL>|<PHONE>|<ID>|<TOX>", "")
+    # trim_ws on both gates: ASCII-whitespace semantics, aligned with
+    # words()/is_blank (a CRLF-padded caption must behave like its
+    # space-padded twin in every mirror)
     return cap.isNotNull() & (trim_ws(cap) != "") & (trim_ws(residue) == "")
-
-
-def with_scrub(df: DataFrame, caption_col: str = "caption") -> DataFrame:
-    cap = F.col(caption_col)
-    return df.withColumn("caption_scrubbed", scrubbed_caption(cap))
 
 
 # The same pipeline for the pandas oracle (kept adjacent so the three

@@ -14,7 +14,6 @@ from ..operators.cascade import metrics_rollup, run_cascade
 from ..operators.rules import RuleConfig
 from ..schemas import PAIRS_SCHEMA
 from ..sources.checkpoint import CheckpointedWriter
-from ..sources.io import write_table
 
 
 def load_pairs(spark: SparkSession, path: str) -> DataFrame:
@@ -53,5 +52,5 @@ def run_pipeline(
 
     final = writer.read_all(spark)
     metrics = metrics_rollup(final, run_id=run_id)
-    write_table(metrics, f"{out_root}/metrics", mode="overwrite")
+    metrics.write.mode("overwrite").parquet(f"{out_root}/metrics")
     return {"group_counts": counts, "out_root": out_root}

@@ -1,1 +1,1 @@
-from . import checkpoint, io  # noqa: F401
+from . import checkpoint  # noqa: F401

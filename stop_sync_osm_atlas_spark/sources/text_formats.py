@@ -10,7 +10,9 @@ Spark-first re-expression of the reference's hand-rolled line parsers:
   orders conjunctive predicates by cost).
 - ATLAS CSV (reference matching_script.py:183, get_atlas_data.py:132):
   ';'-separated with explicit schema — no inference, ever
-  (SURVEY.md §1.3).
+  (SURVEY.md §1.3). That is plain ``spark.read.csv(path, sep=";",
+  header=True, schema=...)`` and needs no wrapper; the zipped variant
+  is ``read_zip_csv`` below.
 
 At 100 TB these scans parallelize by file split natively; the
 reference's 500k-row chunk loop (get_atlas_data.py:205) is subsumed by
@@ -76,28 +78,6 @@ def read_hrdf_gleise_like(spark: SparkSession, path: str) -> DataFrame:
         F.substring("value", 1, 7).try_cast("long").alias("uic"),
         F.regexp_extract("value", r"'([^']*)'", 1).alias("name"),
         F.regexp_extract("value", r"(\d+)\s*$", 1).try_cast("int").alias("track"),
-    )
-
-
-ATLAS_CSV_SCHEMA = T.StructType(
-    [
-        T.StructField("sloid", T.StringType()),
-        T.StructField("number", T.LongType()),
-        T.StructField("designation", T.StringType()),
-        T.StructField("designationOfficial", T.StringType()),
-        T.StructField("wgs84North", T.DoubleType()),
-        T.StructField("wgs84East", T.DoubleType()),
-    ]
-)
-
-
-def read_semicolon_csv(
-    spark: SparkSession, path: str, schema: T.StructType | None = None
-) -> DataFrame:
-    """';'-separated CSV with explicit schema (S1); Catalyst prunes
-    unselected columns automatically (S2)."""
-    return spark.read.csv(
-        path, sep=";", header=True, schema=schema or ATLAS_CSV_SCHEMA
     )
 
 

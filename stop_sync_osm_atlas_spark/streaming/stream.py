@@ -5,12 +5,20 @@ notion is persistent-override replay, which we implement as snapshot
 checkpoints. This module exists because a 100 TB ingestion pipeline
 usually *arrives* as a stream: the same stateless rule cascade applied
 via readStream, with a windowed per-minute metrics aggregation
-(watermarked) as the streaming metrics sink.
+(watermarked) as the streaming metrics sink. Both run
+``operators/cascade.rule_decisions`` — the batch cascade's own rule
+core (``rules.rule_hits`` + ``rules.with_rule_resolution``), so a rule,
+threshold or enable switch cannot drift between batch and stream.
 
 Near-dup clustering is deliberately NOT in the streaming path — it is a
 global self-join and belongs to the periodic batch compaction (the
 standard lambda split); the streaming decisions carry rule/scrub
 results only.
+
+``stage_and_drain``/``stage_and_drain_many`` replay a batch frame
+through these transforms for grading. They stage the frame as given:
+a caller whose frame scans narrow widens it first (q53 does); q19
+stages its sessionizer input as it is.
 """
 
 from __future__ import annotations
@@ -18,59 +26,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators import scrub as SCRUB
-from ..operators.cascade import score_signals
-from ..operators.rules import (
-    RuleConfig,
-    enabled_hits,
-    metadata_rule_hits,
-    signal_rule_hits,
-    with_rule_resolution,
-)
+from ..operators.cascade import rule_decisions
+from ..operators.rules import RuleConfig
 from ..schemas import PAIRS_SCHEMA
-from ..session import widen_if_narrow
-
-
-def _resolve_stream(scored: DataFrame, cfg: RuleConfig) -> DataFrame:
-    """Shared rule resolution for both streaming transforms, mirroring
-    run_cascade's scrub derivation: ONE caption_scrubbed_pre column
-    feeds the scrub hit, the pii-residue hit and the final scrubbed
-    caption, instead of three independent full regexp_replace ladders
-    (scrub_hit + pii_only_hit + with_scrub each re-ran the ~1 ms/row
-    PII+toxicity alternation; CollapseProject still re-expands per
-    REFERENCE, but the reference count is bounded at three and the
-    derivation is now the same code shape the batch cascade uses)."""
-    scored = scored.withColumn("is_cluster_rep", F.lit(True)).withColumn(
-        "caption_scrubbed_pre", SCRUB.scrubbed_caption(F.col("caption"))
-    )
-    hits = metadata_rule_hits(scored, cfg)
-    hits.update(signal_rule_hits(cfg))
-    hits["scrub"] = F.col("caption").isNotNull() & (
-        F.col("caption_scrubbed_pre") != F.col("caption")
-    )
-    hits["pii_only_after_scrub"] = SCRUB.pii_only_from_scrubbed(
-        F.col("caption"), F.col("caption_scrubbed_pre")
-    )
-    hits = enabled_hits(hits, cfg)
-    s_hit = hits.pop("scrub")
-    p_hit = hits.pop("pii_only_after_scrub")
-    resolved = with_rule_resolution(scored, hits, s_hit, p_hit)
-    return resolved.withColumn(
-        "caption_scrubbed",
-        F.when(
-            F.col("decision") == "scrub", F.col("caption_scrubbed_pre")
-        ).otherwise(F.col("caption")),
-    )
 
 
 def stream_decisions(
     spark: SparkSession, input_dir: str, cfg: RuleConfig | None = None
 ) -> DataFrame:
     """readStream over a parquet directory -> streaming decisions frame."""
-    cfg = cfg or RuleConfig()
     pairs = spark.readStream.schema(PAIRS_SCHEMA).parquet(input_dir)
-    resolved = _resolve_stream(score_signals(pairs), cfg)
-    return resolved.select(
+    return rule_decisions(pairs, cfg).select(
         "image_id", "decision", "rule", "severity", "caption_scrubbed", "lang"
     )
 
@@ -92,12 +58,11 @@ def stream_metrics(
     a deployment whose rows arrive with a real event-time column would
     watermark that column instead.
     """
-    cfg = cfg or RuleConfig()
     pairs = spark.readStream.schema(PAIRS_SCHEMA).parquet(input_dir)
     pairs = pairs.withColumn("ingest_ts", F.current_timestamp())
-    resolved = _resolve_stream(score_signals(pairs), cfg)
     return (
-        resolved.withWatermark("ingest_ts", watermark)
+        rule_decisions(pairs, cfg)
+        .withWatermark("ingest_ts", watermark)
         .groupBy(F.window("ingest_ts", window), "decision")
         .agg(F.count("*").alias("n"))
         .select(F.col("window.start").alias("window_start"), "decision", "n")
@@ -165,10 +130,6 @@ def stage_and_drain_many(
         f"{hashlib.md5(tag.encode()).hexdigest()[:10]}_p{os.getpid()}"
     )
     out: dict[str, DataFrame] = {}
-    # widen before staging so the replay micro-batches fan out; row
-    # placement does not affect any drain contract (per-key state,
-    # sets, watermarked counts)
-    df = widen_if_narrow(df)
     # the staging write sits INSIDE the try so a mid-write failure
     # (disk full, serialization error) still hits the finally rmtree
     try:

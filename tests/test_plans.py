@@ -79,25 +79,14 @@ def test_widen_if_narrow_widens_only_narrow_frames(spark):
 
 
 def test_cascade_rules_stay_codegen(spark, fixture_paths):
-    """The metadata rule ladder must be whole-stage-codegen'd (no
-    Python row UDFs in the hot path)."""
-    from stop_sync_osm_atlas_spark.operators import scrub as SC
-    from stop_sync_osm_atlas_spark.operators.rules import RuleConfig, metadata_rule_hits, with_rule_resolution
+    """The rule ladder (the unclustered rule core q23 and streaming
+    run) must be whole-stage-codegen'd (no Python row UDFs in the hot
+    path)."""
+    from stop_sync_osm_atlas_spark.operators.cascade import rule_decisions
     from stop_sync_osm_atlas_spark.schemas import PAIRS_SCHEMA
 
     pairs = spark.read.schema(PAIRS_SCHEMA).parquet(fixture_paths["pairs"])
-    scored = (
-        pairs.withColumn("lang", F.lit("en"))
-        .withColumn("perplexity", F.lit(None).cast("double"))
-        .withColumn("is_cluster_rep", F.lit(True))
-    )
-    hits = metadata_rule_hits(scored, RuleConfig())
-    hits["langid_undetermined"] = F.lit(False)
-    hits["high_perplexity"] = F.lit(False)
-    hits["near_duplicate"] = F.lit(False)
-    out = with_rule_resolution(
-        scored, hits, SC.scrub_hit(F.col("caption")), SC.pii_only_hit(F.col("caption"))
-    )
+    out = rule_decisions(pairs)
     plan = _plan(out.select("image_id", "rule", "decision"))
     # '*' node prefix in formatted output marks whole-stage-codegen spans
     assert "* Project" in plan or "WholeStageCodegen" in plan, plan
@@ -218,10 +207,8 @@ def test_decisions_sink_partition_pruning(spark, tmp_path):
     """The 100x read-path claim for the decisions sink: a part_bucket
     predicate over the directory-partitioned parquet layout must become
     a PartitionFilter on the scan (directory pruning — the parquet
-    stand-in for Iceberg partition/zone-map skipping, sources/io.py),
-    and the pruned scan must actually touch only that bucket's files."""
-    from stop_sync_osm_atlas_spark.sources.io import read_table, write_table
-
+    stand-in for Iceberg partition/zone-map skipping), and the pruned
+    scan must actually touch only that bucket's files."""
     dec = spark.range(0, 256).select(
         F.concat(F.lit("img:"), F.col("id")).alias("image_id"),
         F.lit("keep").alias("decision"),
@@ -230,14 +217,14 @@ def test_decisions_sink_partition_pruning(spark, tmp_path):
         ),
     )
     path = str(tmp_path / "decisions")
-    write_table(dec, path, partition_by=["part_bucket"])
+    dec.write.mode("overwrite").partitionBy("part_bucket").parquet(path)
 
     def scan_num_files(df) -> int:
         df.collect()
         scan = df._jdf.queryExecution().executedPlan().collectLeaves().apply(0)
         return scan.metrics().apply("numFiles").value()
 
-    rd = read_table(spark, path).filter(F.col("part_bucket") == 3).select("image_id")
+    rd = spark.read.parquet(path).filter(F.col("part_bucket") == 3).select("image_id")
     plan = _plan(rd)
     scan = [
         seg for seg in plan.split("\n\n")
@@ -249,7 +236,7 @@ def test_decisions_sink_partition_pruning(spark, tmp_path):
     # pruning is physical, not cosmetic: the filtered scan's numFiles
     # metric must be a strict fraction of the full relation's
     n_pruned = scan_num_files(rd)
-    n_all = scan_num_files(read_table(spark, path).select("image_id"))
+    n_all = scan_num_files(spark.read.parquet(path).select("image_id"))
     assert 0 < n_pruned < n_all, (n_pruned, n_all)
 
 

@@ -202,6 +202,46 @@ def test_streaming_honors_disabled_rules(spark, fixture_paths, fixture_1k):
     assert (out.loc[only_off, "rule"] == "keep").all()
 
 
+def test_stream_decisions_match_batch_cascade(spark, fixture_paths, nd_kwargs):
+    """The streaming cascade and the batch run_cascade resolve through
+    one rule core, so wherever the batch-only signals are silent (no
+    near-duplicate and no corrupt-image hit in the batch reasons) they
+    agree row for row on rule, decision, caption_scrubbed and lang —
+    under the default config and with rules disabled. This also ties
+    the fused Python signal pass (batch) to its Catalyst mirror
+    (streaming)."""
+    from stop_sync_osm_atlas_spark.operators.cascade import run_cascade
+    from stop_sync_osm_atlas_spark.operators.rules import RuleConfig
+    from stop_sync_osm_atlas_spark.streaming.stream import stage_and_drain, stream_decisions
+
+    cols = ["rule", "decision", "caption_scrubbed", "lang"]
+    pairs = spark.read.schema(PAIRS_SCHEMA).parquet(fixture_paths["pairs"])
+    for tag, cfg in (
+        ("default", RuleConfig()),
+        ("disabled", RuleConfig(disabled_rules=("caption_too_short", "scrub"))),
+    ):
+        batch = run_cascade(pairs, cfg, neardup_kwargs=nd_kwargs).toPandas()
+        batch = batch[
+            ~batch["reasons"].map(
+                lambda r: bool({"near_duplicate", "corrupt_image"} & set(r))
+            )
+        ].set_index("image_id")
+        stream = (
+            stage_and_drain(
+                spark,
+                pairs,
+                lambda s, d, cfg=cfg: stream_decisions(s, d, cfg),
+                f"stream_vs_batch_{tag}",
+                f"stream_vs_batch_{tag}",
+            )
+            .toPandas()
+            .set_index("image_id")
+        )
+        assert len(batch) > len(stream) // 2, (tag, len(batch))
+        got = stream.loc[batch.index, cols]
+        pd.testing.assert_frame_equal(got, batch[cols], check_dtype=False, obj=tag)
+
+
 def test_streaming_windowed_metrics(spark, fixture_paths, fixture_1k, tmp_path):
     """Watermarked tumbling-window metrics over the decision stream."""
     import shutil
